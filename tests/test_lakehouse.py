@@ -163,6 +163,27 @@ def test_vacuum_retention_spares_staged_uncommitted_files(spark, table):
     assert rows(table.read(s2), "k") == [(1,), (2,)]   # commit still readable
 
 
+def test_commit_body_is_written_before_its_name_is_visible(
+        spark, table, monkeypatch):
+    """Readers list _txn_log and parse every sequence file they find, so
+    a commit's name must appear only once its body is complete: while
+    the body is serialized, the name is not yet visible."""
+    import json
+    target = os.path.join(table._log_path, f"{1:020d}.json")
+    visible_during_write = []
+    real_dump = json.dump
+
+    def watching_dump(obj, fh, **kw):
+        visible_during_write.append(os.path.exists(target))
+        return real_dump(obj, fh, **kw)
+
+    monkeypatch.setattr(json, "dump", watching_dump)
+    assert table._commit("append", [], []) == 1
+    monkeypatch.undo()
+    assert visible_during_write == [False]
+    assert [s.snapshot_id for s in table.snapshots()] == [1]
+
+
 def test_files_df_metadata_table(spark, table):
     """files_df: the Iceberg tbl.files analog — one row per live file
     with size, decoded partition values, and manifest stats."""
@@ -291,6 +312,36 @@ def test_lakehouse_planner_rewrite_in_range_full_reread(spark, table, tmp_path):
     plan = p.plan_read(spark)
     assert plan.mode == "full" and "lineage broken" in plan.reason
     assert rows(plan.df, "k", "v") == [(1, "A")]
+
+
+def test_planner_ledger_concurrent_commits_never_share_a_tmp_file(
+        spark, table, tmp_path):
+    """Concurrent runs may commit one planner's watermark at once (last
+    writer wins). Eight threads committing it under a short switch
+    interval all return, and every read of the ledger parses — a tmp
+    name shared between commits fails both: one os.replace moves the
+    file out from under the other, or publishes interleaved bytes."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+    p = LakehousePlanner(table, str(tmp_path / "ledger.json"))
+    sid = table.append(_df(spark, [(1, D1, "a")]))
+    plan = p.plan_read(spark)
+
+    def worker(_):
+        for _ in range(150):
+            plan.commit()
+            assert p._read_ledger() == sid
+        return True
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as ex:
+            futures = [ex.submit(worker, i) for i in range(8)]
+            assert all(f.result(timeout=120) for f in futures)
+    finally:
+        sys.setswitchinterval(old)
+    assert [f for f in os.listdir(tmp_path) if f.endswith(".tmp")] == []
 
 
 # ----------------------------------------------------- silver binding
@@ -425,28 +476,25 @@ def test_rewrite_changes_content_atomically_and_pins_old_readers(
     pre = table.latest_snapshot_id()
     rolled = (table.read().groupBy("k", "datetime")
               .agg(F.count(F.lit(1)).cast("string").alias("v")))
-    table.rewrite(rolled)
+    table.rewrite(rolled, expected_base=pre)
     assert table.snapshots()[-1].operation == "replace"
     assert rows(table.read(), "k", "v") == [
         (1, "2"), (2, "1"), (3, "1")]            # rows CHANGED (rolled up)
     assert table.read().count() == 3
     assert table.read(pre).count() == 4          # old snapshot untouched
-    # rewrite validates its base: a commit that lands in between fails
-    # the rewrite instead of losing that commit's rows
+    # rewrite validates the base the caller's frame was pinned at: an
+    # append landing between the read and the commit fails the rewrite
+    # instead of vanishing from the rewritten table
     import pytest as _pt
     from w_userflow_featurestore_spark.sources.lakehouse import (
         ConcurrentCommitError,
     )
-    stale_base = table.latest_snapshot_id()
+    pinned = table.latest_snapshot_id()
+    staged = table.read(pinned)
     table.append(_df(spark, [(9, D2, "z")]))
-    staged = table.read().limit(1)
-    orig = table.latest_snapshot_id
-    table.latest_snapshot_id = lambda: stale_base   # stale derivation
-    try:
-        with _pt.raises(ConcurrentCommitError):
-            table.rewrite(staged)
-    finally:
-        table.latest_snapshot_id = orig
+    with _pt.raises(ConcurrentCommitError):
+        table.rewrite(staged, expected_base=pinned)
+    assert (9, "z") in rows(table.read(), "k", "v")
 
 
 def test_run_daily_features_log_format_matches_parquet(spark, tmp_path):

@@ -183,7 +183,7 @@ def _write_instance(dirpath, tables: dict) -> None:
             str(dirpath / f"{extra}.parquet"))
 
 
-@settings(max_examples=2, deadline=None,
+@settings(max_examples=2, deadline=None, print_blob=True,
           suppress_health_check=[HealthCheck.too_slow,
                                  HealthCheck.function_scoped_fixture])
 @given(tables=micro_instance())
@@ -244,7 +244,7 @@ def events_instance(draw):
     return events
 
 
-@settings(max_examples=2, deadline=None,
+@settings(max_examples=2, deadline=None, print_blob=True,
           suppress_health_check=[HealthCheck.too_slow,
                                  HealthCheck.function_scoped_fixture])
 @given(events=events_instance())
@@ -348,7 +348,7 @@ def docs_instance(draw):
     return docs
 
 
-@settings(max_examples=2, deadline=None,
+@settings(max_examples=2, deadline=None, print_blob=True,
           suppress_health_check=[HealthCheck.too_slow,
                                  HealthCheck.function_scoped_fixture])
 @given(docs=docs_instance())
@@ -391,7 +391,7 @@ EVENT_QUERIES_2 = [
 ]
 
 
-@settings(max_examples=2, deadline=None,
+@settings(max_examples=2, deadline=None, print_blob=True,
           suppress_health_check=[HealthCheck.too_slow,
                                  HealthCheck.function_scoped_fixture])
 @given(events=events_instance())
@@ -461,7 +461,7 @@ def embeddings_instance(draw):
     return emb
 
 
-@settings(max_examples=2, deadline=None,
+@settings(max_examples=2, deadline=None, print_blob=True,
           suppress_health_check=[HealthCheck.too_slow,
                                  HealthCheck.function_scoped_fixture])
 @given(emb=embeddings_instance())
@@ -504,7 +504,7 @@ EVENT_QUERIES_3 = [
 ]
 
 
-@settings(max_examples=2, deadline=None,
+@settings(max_examples=2, deadline=None, print_blob=True,
           suppress_health_check=[HealthCheck.too_slow,
                                  HealthCheck.function_scoped_fixture])
 @given(events=events_instance())
@@ -559,7 +559,7 @@ DOC_QUERIES_2 = [
 ]
 
 
-@settings(max_examples=2, deadline=None,
+@settings(max_examples=2, deadline=None, print_blob=True,
           suppress_health_check=[HealthCheck.too_slow,
                                  HealthCheck.function_scoped_fixture])
 @given(docs=docs_instance())
@@ -600,7 +600,7 @@ EVENT_QUERIES_4 = [
 ]
 
 
-@settings(max_examples=2, deadline=None,
+@settings(max_examples=2, deadline=None, print_blob=True,
           suppress_health_check=[HealthCheck.too_slow,
                                  HealthCheck.function_scoped_fixture])
 @given(events=events_instance())
@@ -633,7 +633,7 @@ def test_event_queries_batch4_match_oracles(spark, tmp_path_factory,
         shutil.rmtree(d, ignore_errors=True)
 
 
-@settings(max_examples=2, deadline=None,
+@settings(max_examples=2, deadline=None, print_blob=True,
           suppress_health_check=[HealthCheck.too_slow,
                                  HealthCheck.function_scoped_fixture])
 @given(docs=docs_instance(), emb=embeddings_instance())

@@ -207,9 +207,10 @@ def test_split_ledger_persist_reload_extend_three_batches(spark, tmp_path):
     """The leakage-split ledger's persistence loop: three batches ingest
     through run_split_ledger_update (persist -> reload -> extend), and
     after every commit the ledger equals component_ledger rebuilt from
-    scratch on everything ingested so far — state never drifts. The
-    _current pointer moves only after each write lands (versions 1..3),
-    so a crashed run would leave the prior version live."""
+    scratch on everything ingested so far — state never drifts. Each
+    update is one LogTable commit published only after its write lands
+    (versions 1..3), so a crashed run would leave the prior version
+    live."""
     import json
     import os
     from w_userflow_featurestore_spark.operators.sampling import (
@@ -238,10 +239,10 @@ def test_split_ledger_persist_reload_extend_three_batches(spark, tmp_path):
         assert res.mode == ("initial" if i == 1 else "incremental")
         seen_docs.extend(ids)
         seen_pairs.extend(prs)
-        # on-disk protocol: commit i is ONE O_EXCL sequence file
-        with open(os.path.join(ledger_dir, "_ptr",
+        # on-disk protocol: commit i is ONE sequence file in the log
+        with open(os.path.join(ledger_dir, "_txn_log",
                                f"{i:020d}.json")) as fh:
-            assert json.load(fh)["version"] == i
+            assert json.load(fh)["snapshot_id"] == i
         got = {tuple(r) for r in read_split_ledger(spark, ledger_dir)
                .collect()}
         all_docs = spark.createDataFrame([(d,) for d in seen_docs],
@@ -303,9 +304,9 @@ def test_novelty_ledger_score_then_ingest_three_batches(spark, tmp_path):
         assert res.version == i
         assert res.mode == ("initial" if i == 1 else "incremental")
         seen.extend(ids)
-        with open(os.path.join(ledger_dir, "_ptr",
+        with open(os.path.join(ledger_dir, "_txn_log",
                                f"{i:020d}.json")) as fh:
-            assert json.load(fh)["version"] == i
+            assert json.load(fh)["snapshot_id"] == i
         got_l = {tuple(r) for r in
                  read_novelty_ledger(spark, ledger_dir).collect()}
         want_l = {tuple(r) for r in shingle_ledger(mk(seen)).collect()}
@@ -317,209 +318,163 @@ def test_novelty_ledger_score_then_ingest_three_batches(spark, tmp_path):
     assert scores[6][1] == 10000
 
 
+@pytest.mark.parametrize("old", ["_ptr", "_current"])
+@pytest.mark.parametrize("entry", ["read_split", "read_novelty",
+                                   "update_split", "update_novelty"])
+def test_ledgers_refuse_the_pointer_store_layout(spark, tmp_path, old,
+                                                 entry):
+    """A ledger directory in the retired pointer-store layout (``_ptr/``
+    sequence files or a ``_current`` pointer) holds no LogTable
+    commits. Reading it must not report "no ledger yet", and an update
+    must not silently start a fresh initial ledger over its history:
+    every entry point raises ValueError naming the layout, and leaves
+    the directory untouched."""
+    import os
+    from w_userflow_featurestore_spark import runner
+    d = str(tmp_path / "old_ledger")
+    if old == "_ptr":
+        os.makedirs(os.path.join(d, "_ptr"))
+    else:
+        os.makedirs(d)
+        with open(os.path.join(d, "_current"), "w") as fh:
+            fh.write('{"version": 3}')
+    docs = spark.createDataFrame([(1, "a b c d")],
+                                 "doc_id long, text string")
+    pairs = spark.createDataFrame([], "doc_a long, doc_b long")
+    call = {
+        "read_split": lambda: runner.read_split_ledger(spark, d),
+        "read_novelty": lambda: runner.read_novelty_ledger(spark, d),
+        "update_split": lambda: runner.run_split_ledger_update(
+            spark, d, docs.select("doc_id"), pairs),
+        "update_novelty": lambda: runner.run_novelty_ledger_update(
+            spark, d, docs),
+    }[entry]
+    with pytest.raises(ValueError, match=old):
+        call()
+    assert not os.path.exists(os.path.join(d, "_txn_log"))
+
+
 def test_ledger_pointer_cas_rejects_the_losing_concurrent_writer(
-        spark, tmp_path):
-    """Round-9 ADVICE: two concurrent ingests that both read base N
-    must NOT both land — the loser's commit would silently erase the
-    winner's counts from the additive ledger. The CAS raises
-    ConcurrentLedgerError for the writer whose read went stale, and
-    the committed ledger still holds exactly the winner's history."""
+        spark, tmp_path, monkeypatch):
+    """Two concurrent ingests that both read version N must NOT both
+    land — the loser's commit would silently erase the winner's counts
+    from the additive ledger. The commit raises ConcurrentCommitError
+    for the writer whose read went stale, and the committed ledger
+    still holds exactly the winner's history."""
     import os
     import pytest as _pt
     from w_userflow_featurestore_spark.operators.dedup import (
         shingle_ledger,
     )
     from w_userflow_featurestore_spark.runner import (
-        ConcurrentLedgerError, InMemoryLedgerPointerStore,
         read_novelty_ledger, run_novelty_ledger_update,
     )
-
-    class FrozenCurrentStore:
-        """Wraps a real store but serves a frozen current entry —
-        models a writer whose base read happened before a rival
-        committed."""
-
-        def __init__(self, inner):
-            self.inner, self.frozen = inner, None
-
-        def current_entry(self, d):
-            return dict(self.frozen) if self.frozen is not None \
-                else self.inner.current_entry(d)
-
-        def current(self, d):
-            e = self.current_entry(d)
-            return None if e is None else e["version"]
-
-        def commit(self, d, v, base, entry=None):
-            self.inner.commit(d, v, base, entry)
-
+    from w_userflow_featurestore_spark.sources import (
+        ConcurrentCommitError, LogTable,
+    )
     ledger_dir = str(tmp_path / "novelty_cas")
     os.makedirs(ledger_dir)
-    inner = InMemoryLedgerPointerStore()
-    store = FrozenCurrentStore(inner)
     texts = {1: "a b c d e", 2: "f g h i j", 3: "k l m n o"}
     mk = lambda ids: spark.createDataFrame(
         [(d, texts[d]) for d in ids], "doc_id long, text string")
     assert run_novelty_ledger_update(
-        spark, ledger_dir, mk([1]), pointer_store=store).version == 1
-    store.frozen = inner.current_entry(ledger_dir)  # rival A's stale base
+        spark, ledger_dir, mk([1])).version == 1
+    # freeze every base read at version 1: models a writer whose read
+    # happened before a rival committed (the commit itself re-lists the
+    # log, so the freeze never hides the real latest from the CAS)
+    monkeypatch.setattr(LogTable, "latest_snapshot_id", lambda self: 1)
     # rival B commits v2 first (it read base 1 too — via the freeze)
     assert run_novelty_ledger_update(
-        spark, ledger_dir, mk([2]), pointer_store=store).version == 2
+        spark, ledger_dir, mk([2])).version == 2
     # rival A now merges against v1 and tries to commit v2: CAS loses
-    with _pt.raises(ConcurrentLedgerError):
-        run_novelty_ledger_update(spark, ledger_dir, mk([3]),
-                                  pointer_store=store)
+    with _pt.raises(ConcurrentCommitError):
+        run_novelty_ledger_update(spark, ledger_dir, mk([3]))
+    monkeypatch.undo()
     # the winner's history is intact: ledger == batches {1} + {2}
-    store.frozen = None
     got = {tuple(r) for r in
-           read_novelty_ledger(spark, ledger_dir,
-                               pointer_store=store).collect()}
+           read_novelty_ledger(spark, ledger_dir).collect()}
     want = {tuple(r) for r in shingle_ledger(mk([1, 2])).collect()}
     assert got == want
     # and the re-run against the fresh base succeeds as v3
     assert run_novelty_ledger_update(
-        spark, ledger_dir, mk([3]), pointer_store=store).version == 3
+        spark, ledger_dir, mk([3])).version == 3
 
 
-def test_ledger_pointer_file_store_cas_and_legacy_upgrade(tmp_path):
-    """The default file backend: O_EXCL sequence files ARE the CAS
-    (dense versions -> the filename race), and a pre-round-10 ledger
-    whose pointer is the legacy single _current file is read in place
-    and upgraded by its next commit."""
-    import json
-    import os
+def test_ledger_pointer_file_store_cas_and_legacy_upgrade(spark, tmp_path):
+    """The ledger commit is LogTable's: a replace commit validated
+    against ``expected_base`` is a compare-and-swap on the log's dense
+    sequence numbers — a stale base raises, whether the table is empty
+    or has moved on."""
     import pytest as _pt
-    from w_userflow_featurestore_spark.runner import (
-        ConcurrentLedgerError, FileLedgerPointerStore,
+    from w_userflow_featurestore_spark.sources import (
+        ConcurrentCommitError, LogTable,
     )
-    d = str(tmp_path / "led")
-    os.makedirs(d)
-    store = FileLedgerPointerStore()
-    assert store.current(d) is None
-    with _pt.raises(ConcurrentLedgerError):
-        store.commit(d, 2, 1)           # stale base: nothing committed yet
-    store.commit(d, 1, None)
-    assert store.current(d) == 1
-    with _pt.raises(ConcurrentLedgerError):
-        store.commit(d, 1, None)        # losing the filename race
-    with _pt.raises(ConcurrentLedgerError):
-        store.commit(d, 3, 2)           # pre-write check: base moved
-    store.commit(d, 2, 1)
-    assert store.current(d) == 2
-    # legacy layout: _current only, no _ptr sequence files
-    legacy = str(tmp_path / "legacy")
-    os.makedirs(legacy)
-    with open(os.path.join(legacy, "_current"), "w") as fh:
-        json.dump({"version": 5}, fh)
-    assert store.current(legacy) == 5
-    store.commit(legacy, 6, 5)          # upgrade in place
-    assert store.current(legacy) == 6
-    assert os.path.exists(os.path.join(legacy, "_ptr",
-                                       f"{6:020d}.json"))
-
-
-def test_split_ledger_protocol_holds_on_a_swapped_pointer_backend(
-        spark, tmp_path):
-    """Round-9 verdict #4 'done' criterion: the split-ledger protocol
-    runs unchanged with the pointer routed through a non-filesystem
-    backend (the catalog-backed object-store deployment shape) — no
-    _current/_ptr file ever touches disk."""
-    import os
-    from w_userflow_featurestore_spark.operators.sampling import (
-        component_ledger,
-    )
-    from w_userflow_featurestore_spark.runner import (
-        InMemoryLedgerPointerStore, read_split_ledger,
-        run_split_ledger_update,
-    )
-    ledger_dir = str(tmp_path / "split_mem")
-    os.makedirs(ledger_dir)
-    store = InMemoryLedgerPointerStore()
-    mk_docs = lambda ids: spark.createDataFrame(
-        [(d,) for d in ids], "doc_id long")
-    mk_pairs = lambda prs: spark.createDataFrame(
-        prs, "doc_a long, doc_b long")
-    batches = [([0, 1, 2], [(0, 1)]),
-               ([3, 4], [(1, 3)]),
-               ([5], [])]
-    seen_docs: list[int] = []
-    seen_pairs: list[tuple[int, int]] = []
-    for i, (ids, prs) in enumerate(batches, start=1):
-        res = run_split_ledger_update(spark, ledger_dir, mk_docs(ids),
-                                      mk_pairs(prs),
-                                      pointer_store=store)
-        assert res.version == i
-        seen_docs.extend(ids)
-        seen_pairs.extend(prs)
-        got = {tuple(r) for r in
-               read_split_ledger(spark, ledger_dir,
-                                 pointer_store=store).collect()}
-        want = {tuple(r) for r in
-                component_ledger(mk_docs(seen_docs),
-                                 mk_pairs(seen_pairs)).collect()}
-        assert got == want
-    # the pointer never touched the filesystem
-    assert not os.path.exists(os.path.join(ledger_dir, "_ptr"))
-    assert not os.path.exists(os.path.join(ledger_dir, "_current"))
+    t = LogTable.create(spark, str(tmp_path / "led"))
+    assert t.latest_snapshot_id() is None
+    with _pt.raises(ConcurrentCommitError):
+        t._commit("replace", [], [], expected_base=1)  # nothing committed
+    assert t._commit("replace", [], [], expected_base=None) == 1
+    assert t.latest_snapshot_id() == 1
+    with _pt.raises(ConcurrentCommitError):
+        t._commit("replace", [], [], expected_base=None)  # lost the race
+    with _pt.raises(ConcurrentCommitError):
+        t._commit("replace", [], [], expected_base=2)  # base never existed
+    assert t._commit("replace", [], [], expected_base=1) == 2
+    assert t.latest_snapshot_id() == 2
 
 
 def test_file_pointer_store_exactly_one_winner_under_real_threads(
-        tmp_path):
-    """The O_EXCL filename race IS the CAS: 8 threads that all read
-    base 1 race to commit v2 through one barrier — exactly one wins,
-    every loser gets ConcurrentLedgerError, and the committed entry is
-    the winner's (its staged dir name survives verbatim)."""
-    import json
+        spark, tmp_path):
+    """The exclusive publish of the next sequence number IS the CAS: 8
+    threads that all read base 1 race to commit through one barrier —
+    exactly one wins, every loser gets ConcurrentCommitError, and the
+    committed entry is the winner's."""
     import os
     import threading
     from concurrent.futures import ThreadPoolExecutor
-    from w_userflow_featurestore_spark.runner import (
-        ConcurrentLedgerError, FileLedgerPointerStore,
+    from w_userflow_featurestore_spark.sources import (
+        ConcurrentCommitError, LogTable,
     )
-    d = str(tmp_path / "led")
-    os.makedirs(d)
-    store = FileLedgerPointerStore()
-    store.commit(d, 1, None, {"dir": "v1-base"})
+    t = LogTable.create(spark, str(tmp_path / "led"))
+    t._commit("replace", [], [], txn="base", expected_base=None)
     barrier = threading.Barrier(8)
 
     def worker(i):
         barrier.wait()
         try:
-            store.commit(d, 2, 1, {"dir": f"v2-w{i}"})
+            t._commit("replace", [], [], txn=f"w{i}", expected_base=1)
             return ("win", i)
-        except ConcurrentLedgerError:
+        except ConcurrentCommitError:
             return ("lose", i)
 
     with ThreadPoolExecutor(max_workers=8) as ex:
-        outcomes = list(ex.map(worker, range(8)))
+        outcomes = list(ex.map(worker, range(8), timeout=60))
     wins = [i for o, i in outcomes if o == "win"]
     assert len(wins) == 1
     assert len([1 for o, _ in outcomes if o == "lose"]) == 7
-    entry = store.current_entry(d)
-    assert entry["version"] == 2
-    assert entry["dir"] == f"v2-w{wins[0]}"
-    # and the pointer dir holds exactly the two committed sequence files
-    assert sorted(os.listdir(os.path.join(d, "_ptr"))) == [
+    snaps = t.snapshots()
+    assert [s.snapshot_id for s in snaps] == [1, 2]
+    assert snaps[-1].txn == f"w{wins[0]}"
+    # and the log holds exactly the two committed sequence files
+    assert sorted(f for f in os.listdir(t._log_path)
+                  if not f.startswith("_")) == [
         f"{1:020d}.json", f"{2:020d}.json"]
-    with open(os.path.join(d, "_ptr", f"{2:020d}.json")) as fh:
-        assert json.load(fh)["dir"] == f"v2-w{wins[0]}"
 
 
 def test_vacuum_ledger_reclaims_orphans_keeps_recent_versions(
         spark, tmp_path):
-    """vacuum_ledger removes staged-but-never-committed directories
-    (crash/lost-race orphans) and superseded versions beyond
-    keep_last, never the retained versions or the pointer history —
-    and the ledger reads identically afterwards."""
+    """Ledger space is reclaimed by LogTable maintenance:
+    expire_snapshots(keep_last) drops superseded versions from history
+    and vacuum deletes their files and crash orphans, never a retained
+    version's files — and the ledger reads identically afterwards."""
     import os
-    import pytest as _pt
     from w_userflow_featurestore_spark.operators.dedup import (
         shingle_ledger,
     )
     from w_userflow_featurestore_spark.runner import (
-        read_novelty_ledger, run_novelty_ledger_update, vacuum_ledger,
+        read_novelty_ledger, run_novelty_ledger_update,
     )
+    from w_userflow_featurestore_spark.sources import LogTable
     ledger_dir = str(tmp_path / "nl")
     os.makedirs(ledger_dir)
     texts = {1: "a b c d e", 2: "f g h i j", 3: "k l m n o"}
@@ -528,62 +483,56 @@ def test_vacuum_ledger_reclaims_orphans_keeps_recent_versions(
     for i, ids in enumerate(([1], [2], [3]), start=1):
         assert run_novelty_ledger_update(
             spark, ledger_dir, mk(ids)).version == i
-    # plant a crash orphan: staged dir no pointer entry names
-    os.makedirs(os.path.join(ledger_dir, "v4-deadbeef"))
-    # default retention (24 h) protects only UNNAMED young dirs — the
-    # orphan is indistinguishable from a concurrent writer's live
-    # staging dir (round-10 ADVICE: deleting that dir would let the
-    # writer publish a pointer to a vanished directory). v1's dir is
-    # NAMED by pointer history — provably committed, just superseded —
-    # so the keep_last contract reclaims it immediately, no 24h wait.
-    removed = vacuum_ledger(ledger_dir, keep_last=2)
-    assert any(n.startswith("v1-") for n in removed)
-    assert len(removed) == 1               # the young orphan survived
+    t = LogTable(spark, ledger_dir)
+    v1_files = t.files(1)
+    # plant a crash orphan: a staged file no commit names
+    orphan = os.path.join(t._data_path, "deadbeef-orphan.parquet")
+    open(orphan, "w").close()
+    assert t.expire_snapshots(keep_last=2) == 1
+    # default retention (24 h) keeps every young unreferenced file: the
+    # orphan is indistinguishable from a concurrent writer's staged
+    # file, and v1's files are reclaimed only after the window
+    assert t.vacuum() == 0
     # retention 0 = the documented "no concurrent writers" mode
-    removed = vacuum_ledger(ledger_dir, keep_last=2,
-                            retention_seconds=0)
-    assert removed == ["v4-deadbeef"]
-    live = [n for n in os.listdir(ledger_dir) if n.startswith("v")]
-    assert len(live) == 2
-    # pointer history intact (still 3 sequence files), reads unchanged
-    assert len(os.listdir(os.path.join(ledger_dir, "_ptr"))) == 3
+    assert t.vacuum(retention_seconds=0) == len(v1_files) + 1
+    assert not os.path.exists(orphan)
+    left = {os.path.relpath(os.path.join(r, f), t._data_path)
+            for r, _d, fs in os.walk(t._data_path) for f in fs
+            if f.endswith(".parquet")}
+    assert left == set(t.files(2)) | set(t.files(3))
+    # the two retained versions still read, the latest unchanged
+    assert [s.snapshot_id for s in t.snapshots()] == [2, 3]
+    assert t.read(2).count() > 0
     got = {tuple(r) for r in
            read_novelty_ledger(spark, ledger_dir).collect()}
     want = {tuple(r) for r in shingle_ledger(mk([1, 2, 3])).collect()}
     assert got == want
-    with _pt.raises(ValueError):
-        vacuum_ledger(ledger_dir, keep_last=0)
-    # an empty (uncommitted) ledger dir refuses to guess
-    empty = str(tmp_path / "empty")
-    os.makedirs(empty)
-    os.makedirs(os.path.join(empty, "v1-aaaa"))
-    assert vacuum_ledger(empty) == []
 
 
-def test_file_pointer_store_readers_never_see_partial_commits(tmp_path):
+def test_file_pointer_store_readers_never_see_partial_commits(
+        spark, tmp_path):
     """The write-then-link publish contract: concurrent readers
-    hammering current_entry() while writers race a 30-version CAS
-    chain must never observe a half-written commit file (the bare
-    open('x')+dump implementation failed exactly here under
-    full-suite load: a reader parsed a created-but-not-yet-written
-    sequence file into JSONDecodeError)."""
+    hammering snapshots() while writers race a 30-version CAS chain
+    must never observe a half-written commit file (a bare
+    open('x')+dump publish fails exactly here under load: a reader
+    parses a created-but-not-yet-written sequence file into
+    JSONDecodeError)."""
+    import json
     import os
     import threading
     from concurrent.futures import ThreadPoolExecutor
-    from w_userflow_featurestore_spark.runner import (
-        ConcurrentLedgerError, FileLedgerPointerStore,
+    from w_userflow_featurestore_spark.sources import (
+        ConcurrentCommitError, LogTable,
     )
-    d = str(tmp_path / "led")
-    os.makedirs(d)
-    store = FileLedgerPointerStore()
+    t = LogTable.create(spark, str(tmp_path / "led"))
     stop = threading.Event()
     reader_errors: list[Exception] = []
 
     def reader():
         while not stop.is_set():
             try:
-                e = store.current_entry(d)
-                assert e is None or "version" in e
+                for s in t.snapshots():
+                    assert s.operation == "replace"
             except Exception as exc:  # noqa: BLE001 — the assertion
                 reader_errors.append(exc)
                 return
@@ -591,114 +540,113 @@ def test_file_pointer_store_readers_never_see_partial_commits(tmp_path):
     def writer():
         # race the chain forward with CAS retries until v30 commits
         while not stop.is_set():
-            cur = store.current(d)
-            if cur is not None and cur >= 30:
+            base = t.latest_snapshot_id()
+            if base is not None and base >= 30:
                 return
-            base = cur
             try:
-                store.commit(d, (base or 0) + 1, base,
-                             {"dir": f"v{(base or 0) + 1}-x"})
-            except ConcurrentLedgerError:
+                t._commit("replace", [], [], expected_base=base)
+            except ConcurrentCommitError:
                 continue
 
     with ThreadPoolExecutor(max_workers=7) as ex:
         readers = [ex.submit(reader) for _ in range(3)]
         writers = [ex.submit(writer) for _ in range(4)]
-        for w in writers:
-            w.result(timeout=60)
-        stop.set()
+        try:
+            for w in writers:
+                w.result(timeout=60)
+        finally:
+            stop.set()
         for r in readers:
             r.result(timeout=60)
     assert not reader_errors, reader_errors[:1]
-    assert store.current(d) >= 30
+    assert t.latest_snapshot_id() >= 30
     # every published sequence file parses (no torn commits on disk)
-    import json
-    for name in os.listdir(os.path.join(d, "_ptr")):
-        with open(os.path.join(d, "_ptr", name)) as fh:
-            assert "version" in json.load(fh)
+    for name in os.listdir(t._log_path):
+        if name.startswith("_"):
+            continue
+        assert name.endswith(".json"), name    # no leaked tmp files
+        with open(os.path.join(t._log_path, name)) as fh:
+            assert "snapshot_id" in json.load(fh)
 
 
-def test_file_pointer_store_crash_between_write_and_link(tmp_path,
-                                                         monkeypatch):
-    """Crash injection (round-10 verdict #4): a writer dying between
-    its private tmp write and the atomic link publish must leave NO
-    visible commit — readers still see only complete commits, a rerun
-    of the same commit succeeds cleanly, and vacuum_ledger's
-    _ptr/*.tmp sweep reclaims the orphaned tmp."""
+def test_file_pointer_store_crash_between_write_and_link(
+        spark, tmp_path, monkeypatch):
+    """Crash injection: a writer dying between its private tmp write
+    and the atomic link publish must leave NO visible commit — readers
+    still see only complete commits, a rerun of the same commit
+    succeeds cleanly, and vacuum's _txn_log/*.tmp sweep reclaims the
+    orphaned tmp."""
     import os
-    from w_userflow_featurestore_spark.runner import (
-        FileLedgerPointerStore, vacuum_ledger,
-    )
-    d = str(tmp_path / "led")
-    os.makedirs(d)
-    store = FileLedgerPointerStore()
-    store.commit(d, 1, None, {"dir": "v1-base"})
-    os.makedirs(os.path.join(d, "v1-base"))
-
-    real_link = os.link
+    from w_userflow_featurestore_spark.sources import LogTable
+    t = LogTable.create(spark, str(tmp_path / "led"))
+    t._commit("replace", [], [], txn="base", expected_base=None)
 
     def dying_link(src, dst, **kw):
         raise KeyboardInterrupt("simulated crash before publish")
 
     monkeypatch.setattr(os, "link", dying_link)
     try:
-        store.commit(d, 2, 1, {"dir": "v2-crashed"})
+        t._commit("replace", [], [], txn="crashed", expected_base=1)
     except KeyboardInterrupt:
         pass
-    monkeypatch.setattr(os, "link", real_link)
+    monkeypatch.undo()
     # the crash is invisible: v2 never published, reads are complete
-    assert store.current(d) == 1
-    ptr = os.path.join(d, "_ptr")
+    assert t.latest_snapshot_id() == 1
+    log = t._log_path
     # an in-process raise still runs the finally-unlink; a HARD kill
     # (SIGKILL / power loss) does not — plant the orphan exactly as a
     # hard kill between write and link leaves it: torn content under a
-    # name no reader's {version:020d}.json pattern matches
-    assert [n for n in os.listdir(ptr) if n.endswith(".tmp")] == []
-    with open(os.path.join(ptr, f"{2:020d}.json.dead.tmp"), "w") as fh:
-        fh.write('{"version"')
+    # name the reader's *.json pattern never matches
+    assert [n for n in os.listdir(log) if n.endswith(".tmp")] == []
+    orphan = os.path.join(log, f"{2:020d}.json.dead.tmp")
+    with open(orphan, "w") as fh:
+        fh.write('{"snapshot_id"')
     # readers never parse tmp files
-    assert store.current_entry(d)["version"] == 1
+    assert [s.txn for s in t.snapshots()] == ["base"]
     # the rerun commits cleanly over the orphan
-    store.commit(d, 2, 1, {"dir": "v2-retry"})
-    assert store.current_entry(d)["dir"] == "v2-retry"
-    # vacuum reclaims the orphaned tmp (age guard lifted), never the
-    # published sequence files
-    removed = vacuum_ledger(d, keep_last=2, retention_seconds=0)
-    assert any(n.endswith(".tmp") for n in removed)
-    left = os.listdir(ptr)
-    assert sorted(left) == [f"{1:020d}.json", f"{2:020d}.json"]
+    assert t._commit("replace", [], [], txn="retry",
+                     expected_base=1) == 2
+    assert t.snapshots()[-1].txn == "retry"
+    # vacuum keeps a young tmp (possibly a commit in flight), reclaims
+    # it once past retention, and never touches published commits
+    assert t.vacuum() == 0
+    assert t.vacuum(retention_seconds=0) == 1
+    assert sorted(n for n in os.listdir(log) if not n.startswith("_")) \
+        == [f"{1:020d}.json", f"{2:020d}.json"]
 
 
 def test_file_pointer_store_falls_back_when_hard_links_unsupported(
-        tmp_path, monkeypatch):
+        spark, tmp_path, monkeypatch):
     """Filesystems without hard links (some NFS/FUSE/object-store
     mounts) must degrade to bare O_CREAT|O_EXCL — the CAS contract
-    holds (winner commits, loser gets ConcurrentLedgerError), only
-    the torn-read guarantee narrows (round-10 ADVICE)."""
+    holds (winner commits, a stale rewrite gets ConcurrentCommitError,
+    a racing append takes the next number), only the torn-read
+    guarantee narrows."""
     import errno
     import os
     import pytest as _pt
-    from w_userflow_featurestore_spark.runner import (
-        ConcurrentLedgerError, FileLedgerPointerStore,
+    from w_userflow_featurestore_spark.sources import (
+        ConcurrentCommitError, LogTable,
     )
-    d = str(tmp_path / "led")
-    os.makedirs(d)
-    store = FileLedgerPointerStore()
+    t = LogTable.create(spark, str(tmp_path / "led"))
 
     def no_links(src, dst, **kw):
         raise OSError(errno.EPERM, "hard links not supported")
 
     monkeypatch.setattr(os, "link", no_links)
-    store.commit(d, 1, None, {"dir": "v1-a"})
-    assert store.current_entry(d) == {"dir": "v1-a", "version": 1}
+    assert t._commit("replace", [], [], txn="a", expected_base=None) == 1
+    assert [s.txn for s in t.snapshots()] == ["a"]
     # no tmp leaks on the fallback path either
-    assert [n for n in os.listdir(os.path.join(d, "_ptr"))
-            if n.endswith(".tmp")] == []
-    # the filename race still loses cleanly through the fallback
-    with _pt.raises(ConcurrentLedgerError):
-        store.commit(d, 1, None, {"dir": "v1-b"})
-    store.commit(d, 2, 1, {"dir": "v2-a"})
-    assert store.current(d) == 2
+    assert [n for n in os.listdir(t._log_path) if n.endswith(".tmp")] == []
+    # the filename race still loses cleanly through the fallback: the
+    # pre-write check is blinded so the exclusive create decides
+    real_snapshots = LogTable.snapshots
+    monkeypatch.setattr(LogTable, "snapshots", lambda self: [])
+    with _pt.raises(ConcurrentCommitError):
+        t._commit("replace", [], [], txn="b", expected_base=None)
+    monkeypatch.setattr(LogTable, "snapshots", real_snapshots)
+    assert t._commit("replace", [], [], txn="c", expected_base=1) == 2
+    assert t._commit("append", [], [], txn="d") == 3
     # an UNRELATED OSError still surfaces (only link-capability
     # errnos trigger the fallback)
 
@@ -706,36 +654,32 @@ def test_file_pointer_store_falls_back_when_hard_links_unsupported(
         raise OSError(errno.ENOSPC, "no space")
 
     monkeypatch.setattr(os, "link", disk_full)
-    with _pt.raises(OSError):
-        store.commit(d, 3, 2, {"dir": "v3-a"})
+    with _pt.raises(OSError, match="no space"):
+        t._commit("replace", [], [], expected_base=3)
+    assert t.latest_snapshot_id() == 3
 
 
 def test_enosys_link_failure_takes_the_fallback_path(
-        tmp_path, monkeypatch):
-    """Round-11 ADVICE #2: several FUSE/network filesystems raise
-    ENOSYS (not EPERM/EOPNOTSUPP) for an unimplemented os.link — that
-    errno must classify as link-unsupported and degrade to the
-    O_CREAT|O_EXCL path instead of dying with an unclassified
-    OSError."""
+        spark, tmp_path, monkeypatch):
+    """Several FUSE/network filesystems raise ENOSYS (not
+    EPERM/EOPNOTSUPP) for an unimplemented os.link — that errno must
+    classify as link-unsupported and degrade to the O_CREAT|O_EXCL
+    path instead of dying with an unclassified OSError."""
     import errno
     import os
-    from w_userflow_featurestore_spark.runner import (
-        FileLedgerPointerStore,
-    )
-    d = str(tmp_path / "led")
-    os.makedirs(d)
-    store = FileLedgerPointerStore()
+    from w_userflow_featurestore_spark.sources import LogTable
+    t = LogTable.create(spark, str(tmp_path / "led"))
 
     def no_syscall(src, dst, **kw):
         raise OSError(errno.ENOSYS, "function not implemented")
 
     monkeypatch.setattr(os, "link", no_syscall)
-    store.commit(d, 1, None, {"dir": "v1-a"})
-    assert store.current_entry(d) == {"dir": "v1-a", "version": 1}
+    assert t._commit("replace", [], [], txn="a", expected_base=None) == 1
+    assert [s.txn for s in t.snapshots()] == ["a"]
 
 
 def test_fallback_write_failure_retracts_the_published_name(
-        tmp_path, monkeypatch):
+        spark, tmp_path, monkeypatch):
     """On the no-hardlink fallback path the O_EXCL create PUBLISHES the
     sequence name before the body is written — a write failure
     (ENOSPC/EIO) must retract the torn file, or every subsequent read
@@ -744,18 +688,14 @@ def test_fallback_write_failure_retracts_the_published_name(
     import json
     import os
     import pytest as _pt
-    from w_userflow_featurestore_spark.runner import (
-        FileLedgerPointerStore,
-    )
-    d = str(tmp_path / "led")
-    os.makedirs(d)
-    store = FileLedgerPointerStore()
+    from w_userflow_featurestore_spark.sources import LogTable
+    t = LogTable.create(spark, str(tmp_path / "led"))
 
     def no_links(src, dst, **kw):
         raise OSError(errno.EPERM, "hard links not supported")
 
     monkeypatch.setattr(os, "link", no_links)
-    store.commit(d, 1, None, {"dir": "v1-a"})
+    t._commit("replace", [], [], txn="a", expected_base=None)
     real_dump = json.dump
     state = {"n": 0}
 
@@ -769,12 +709,11 @@ def test_fallback_write_failure_retracts_the_published_name(
 
     monkeypatch.setattr(json, "dump", dump_fails_on_target)
     with _pt.raises(OSError, match="no space"):
-        store.commit(d, 2, 1, {"dir": "v2-torn"})
+        t._commit("replace", [], [], txn="torn", expected_base=1)
     monkeypatch.setattr(json, "dump", real_dump)
     # the torn publish was retracted: reads are whole, v2's name free
-    assert store.current_entry(d) == {"dir": "v1-a", "version": 1}
-    assert not os.path.exists(os.path.join(d, "_ptr",
-                                           f"{2:020d}.json"))
+    assert [s.txn for s in t.snapshots()] == ["a"]
+    assert not os.path.exists(os.path.join(t._log_path, f"{2:020d}.json"))
     # the retry commits cleanly instead of a phantom lost-race error
-    store.commit(d, 2, 1, {"dir": "v2-retry"})
-    assert store.current_entry(d) == {"dir": "v2-retry", "version": 2}
+    assert t._commit("replace", [], [], txn="retry", expected_base=1) == 2
+    assert t.snapshots()[-1].txn == "retry"

@@ -41,7 +41,9 @@ from __future__ import annotations
 
 import json
 import os
+import uuid
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -57,6 +59,18 @@ def _list_data_files(path: str) -> list[str]:
                 rel = os.path.relpath(os.path.join(root, f), path)
                 out.append(rel)
     return sorted(out)
+
+
+def _write_watermark(ledger_path: str, body: dict) -> None:
+    """Persist a planner ledger, last writer wins. The tmp name is
+    unique per call: two concurrent runs sharing one tmp file would
+    have one ``os.replace`` move it out from under the other, or
+    publish mixed bytes."""
+    os.makedirs(os.path.dirname(ledger_path) or ".", exist_ok=True)
+    tmp = f"{ledger_path}.{uuid.uuid4().hex}.tmp"
+    with open(tmp, "w") as fh:
+        json.dump(body, fh)
+    os.replace(tmp, ledger_path)   # atomic swap
 
 
 @dataclass
@@ -97,16 +111,12 @@ class IncrementalPlanner:
         # MERGE makes reprocessing idempotent — regression is safe,
         # nothing is lost. The additive split/novelty ledgers in
         # runner.py are the opposite (a lost commit silently erases a
-        # batch's counts) and carry the CAS pointer-store seam; swap
-        # this open()/os.replace for that seam only if a deployment
-        # needs the watermark on a rename-free object store.
-        def commit(files=current):
-            os.makedirs(os.path.dirname(self.ledger_path) or ".", exist_ok=True)
-            tmp = self.ledger_path + ".tmp"
-            with open(tmp, "w") as fh:
-                json.dump({"files": files}, fh)
-            os.replace(tmp, self.ledger_path)   # atomic swap
-
+        # batch's counts), so they are LogTables committed with
+        # compare-and-swap. The watermark stays a plain JSON file
+        # because every run commits it, and a LogTable commit would
+        # add a Spark write to each run.
+        commit = partial(_write_watermark, self.ledger_path,
+                         {"files": current})
         recorded = self._read_ledger()
         full_df = lambda: spark.read.parquet(self.table_path)  # noqa: E731
 
@@ -152,15 +162,8 @@ class LakehousePlanner:
             BrokenLineageError,
         )
         latest = self.table.latest_snapshot_id()
-
-        def commit(sid=latest):
-            os.makedirs(os.path.dirname(self.ledger_path) or ".",
-                        exist_ok=True)
-            tmp = self.ledger_path + ".tmp"
-            with open(tmp, "w") as fh:
-                json.dump({"snapshot_id": sid}, fh)
-            os.replace(tmp, self.ledger_path)
-
+        commit = partial(_write_watermark, self.ledger_path,
+                         {"snapshot_id": latest})
         recorded = self._read_ledger()
         if latest is None:
             return ReadPlan("empty", "table has no snapshots", None,

@@ -34,16 +34,25 @@ only the files that actually contain matched keys (file-granular
 copy-on-write, strictly finer than the parquet fallback's
 partition-granular rewrite).
 
-Commit protocol: a commit is ONE file ``_txn_log/<seq>.json`` created
-with O_EXCL — concurrent committers race on the same sequence number
-and exactly one wins (optimistic concurrency, as in Delta). A crashed
-writer leaves only orphaned staging files, never a partial commit.
+Commit protocol: a commit is ONE file ``_txn_log/<seq>.json``.
+Concurrent committers race on the same sequence number and exactly one
+wins (optimistic concurrency, as in Delta). The body is written to a
+private ``<seq>.json.<uuid>.tmp``, flushed and fsynced, then published
+with one ``os.link`` onto the sequence name: the link fails with
+EEXIST for the loser, and a reader can never open a half-written
+commit. On filesystems without hard links (some NFS, FUSE and
+object-store mounts) the publish falls back to ``O_CREAT|O_EXCL`` +
+write + fsync; the race still has one winner, but a reader may see the
+name before its body. A crashed writer leaves only orphaned staging
+files and ``*.tmp`` files, never a partial commit; ``vacuum`` reclaims
+both.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
 import decimal as _decimal
+import errno
 import json
 import math as _math
 import os
@@ -60,6 +69,50 @@ __all__ = ["LogTable", "BrokenLineageError", "ConcurrentCommitError",
 
 _LOG_DIR = "_txn_log"
 _DATA_DIR = "data"
+# errnos with which os.link reports that the filesystem cannot hard-link
+# (several FUSE/network filesystems say ENOSYS, not EOPNOTSUPP)
+_LINK_UNSUPPORTED = frozenset(
+    getattr(errno, name) for name in
+    ("EPERM", "EACCES", "ENOTSUP", "EOPNOTSUPP", "EMLINK", "ENOSYS")
+    if hasattr(errno, name))
+
+
+def _publish(target: str, body: dict) -> None:
+    """Create ``target`` holding ``body`` as JSON, or raise
+    FileExistsError if the name is taken — the commit's exclusive
+    create. The body is durable in a private tmp file before one
+    ``os.link`` publishes it, so readers see the whole body or no
+    file. Where hard links are unsupported, ``O_CREAT|O_EXCL`` + write
+    + fsync keeps the exclusive create; a failed write there retracts
+    the published name, which would otherwise poison every read."""
+    tmp = f"{target}.{uuid.uuid4().hex}.tmp"
+    try:
+        with open(tmp, "w") as fh:
+            json.dump(body, fh)
+            fh.flush()
+            os.fsync(fh.fileno())
+        try:
+            os.link(tmp, target)
+        except OSError as exc:
+            if exc.errno not in _LINK_UNSUPPORTED:
+                raise
+            fd = os.open(target, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+            try:
+                with os.fdopen(fd, "w") as fh:
+                    json.dump(body, fh)
+                    fh.flush()
+                    os.fsync(fh.fileno())
+            except BaseException:
+                try:
+                    os.unlink(target)
+                except OSError:
+                    pass
+                raise
+    finally:
+        try:
+            os.unlink(tmp)
+        except FileNotFoundError:
+            pass
 
 
 def _stat_value(v):
@@ -569,8 +622,9 @@ class LogTable:
                 remove: list[str], parent_id: int | None = None,
                 txn: str | None = None, expected_base=_UNSET,
                 _retries: int = 20) -> int:
-        """Atomically append one commit; O_EXCL create means two racing
-        writers of the same sequence number cannot both win.
+        """Atomically append one commit; the exclusive publish
+        (:func:`_publish`) means two racing writers of the same sequence
+        number cannot both win.
 
         Optimistic concurrency (Delta's conflict rules, simplified):
         an APPEND has no read-dependency, so losing a race just means
@@ -578,7 +632,7 @@ class LogTable:
         operation (merge / overwrite / replace / rollback) passes the
         snapshot id its staged output was DERIVED from as
         ``expected_base``; if the table has moved past that snapshot —
-        detected either by the pre-write check or by losing the O_EXCL
+        detected either by the pre-write check or by losing the publish
         race — the staged files reflect stale state and the commit
         raises :class:`ConcurrentCommitError` so the caller re-runs the
         operation against the new current snapshot."""
@@ -617,8 +671,7 @@ class LogTable:
                     "stats": stats}
             target = os.path.join(self._log_path, f"{seq:020d}.json")
             try:
-                with open(target, "x") as fh:   # exclusive create = commit
-                    json.dump(body, fh)
+                _publish(target, body)
                 return seq
             except FileExistsError:
                 if validate_base:
@@ -1296,24 +1349,31 @@ class LogTable:
         adds = self._stage_write(df)
         return self._commit("replace", adds, live, expected_base=base)
 
-    def rewrite(self, df: DataFrame, target_files: int = 1) -> int:
+    def rewrite(self, df: DataFrame, *, expected_base: int | None,
+                target_files: int = 1) -> int:
         """Atomic whole-table CONTENT rewrite: replace the live file
         set with ``df`` as ONE ``replace`` commit. Where
         :meth:`compact` preserves rows and only merges files, rewrite
         changes the row set — the roll-up compaction an
         additive-delta ledger needs (sum the deltas, replace the
         deltas with their sums: row count drops to the distinct-key
-        count, the group-sum view is unchanged). ``df`` may be derived
-        from reading this table — staging writes the new files while
-        the live set is still intact, and the commit validates
-        ``expected_base`` so a concurrent commit fails this rewrite
-        instead of losing rows. Readers pinned to older snapshots are
-        untouched; incremental readers crossing the replace commit
-        replan a full read, exactly as for :meth:`compact`."""
-        base = self.latest_snapshot_id()
-        live = self.files(base)
+        count, the group-sum view is unchanged).
+
+        ``expected_base`` is the snapshot ``df`` was derived from
+        (``None`` for a table with no commits yet). It is required
+        because only the caller knows it: a base read here, after the
+        caller pinned ``df``, would let a commit landing in between
+        vanish from the rewritten table. If the table has moved past
+        ``expected_base`` the commit raises
+        :class:`ConcurrentCommitError` and the caller re-derives
+        ``df``. Staging writes the new files while the live set is
+        still intact. Readers pinned to older snapshots are untouched;
+        incremental readers crossing the replace commit replan a full
+        read, exactly as for :meth:`compact`."""
+        live = [] if expected_base is None else self.files(expected_base)
         adds = self._stage_write(df.repartition(target_files))
-        return self._commit("replace", adds, live, expected_base=base)
+        return self._commit("replace", adds, live,
+                            expected_base=expected_base)
 
     def rollback(self, snapshot_id: int) -> int:
         """Reset the table to an older snapshot by committing a new
@@ -1393,34 +1453,42 @@ class LogTable:
 
     def vacuum(self, retention_seconds: float = 24 * 3600.0) -> int:
         """Delete data files unreferenced by the CURRENT timeline (all
-        snapshots reachable from latest). Returns files deleted.
-        Time travel to dead forks stops working — as with any
-        format's vacuum, retention is a policy decision.
+        snapshots reachable from latest), and orphaned ``_txn_log/*.tmp``
+        files — left by a writer killed between its private tmp write
+        and the publish, or during an expire/meta tmp write. Returns
+        files deleted. Time travel to dead forks stops working — as
+        with any format's vacuum, retention is a policy decision.
 
         Files younger than ``retention_seconds`` are kept even when
         unreferenced: ``_stage_write`` moves files into data/ BEFORE
         the commit publishes them, so a zero-retention vacuum racing an
         in-flight append/merge would delete the writer's staged files
         and the winning commit would then reference nonexistent files,
-        permanently breaking reads of that snapshot. The window is the
-        same guard as Delta VACUUM's retention period; pass ``0`` only
-        when no concurrent writer can exist."""
+        permanently breaking reads of that snapshot. A young tmp file
+        may likewise be a commit in flight. The window is the same
+        guard as Delta VACUUM's retention period; pass ``0`` only when
+        no concurrent writer can exist."""
+        cutoff = time.time() - retention_seconds
+
+        def remove_if_old(p: str) -> bool:
+            try:
+                if os.path.getmtime(p) > cutoff:
+                    return False           # possibly in flight
+                os.remove(p)
+            except FileNotFoundError:
+                return False               # lost a race with another vacuum
+            return True
+
+        n = sum(remove_if_old(os.path.join(self._log_path, f))
+                for f in os.listdir(self._log_path) if f.endswith(".tmp"))
         latest = self.latest_snapshot_id()
         if latest is None:
-            return 0
+            return n
         keep = {f for s in self._chain(latest) for f in s.add}
-        cutoff = time.time() - retention_seconds
-        n = 0
         for root, _dirs, fs in os.walk(self._data_path):
             for f in fs:
                 p = os.path.join(root, f)
                 rel = os.path.relpath(p, self._data_path)
                 if f.endswith(".parquet") and rel not in keep:
-                    try:
-                        if os.path.getmtime(p) > cutoff:
-                            continue       # possibly staged, not yet committed
-                        os.remove(p)
-                    except FileNotFoundError:
-                        continue           # lost a race with another vacuum
-                    n += 1
+                    n += remove_if_old(p)
         return n

@@ -293,8 +293,11 @@ def streaming_drift_monitor(events: DataFrame, table_path: str,
             t.append(inc, txn=f"drift:{checkpoint}:{batch_id}")
             if compact_every and (batch_id + 1) % compact_every == 0:
                 # roll-up: deltas -> their group-sum, one replace commit
-                t.rewrite(read_drift_ledger(batch.sparkSession,
-                                            table_path))
+                # against the snapshot it summed
+                base = t.latest_snapshot_id()
+                t.rewrite(read_drift_ledger(batch.sparkSession, table_path,
+                                            base),
+                          expected_base=base)
 
     writer = (events.writeStream
               .foreachBatch(_sink)
@@ -306,12 +309,13 @@ def streaming_drift_monitor(events: DataFrame, table_path: str,
     return writer.start()
 
 
-def read_drift_ledger(spark: SparkSession, table_path: str) -> DataFrame:
-    """Current (datetime, category, n) counts over a
-    ``streaming_drift_monitor`` delta table: sum the per-batch deltas —
-    equals one groupBy-count over the full ingested event history."""
+def read_drift_ledger(spark: SparkSession, table_path: str,
+                      snapshot_id: int | None = None) -> DataFrame:
+    """(datetime, category, n) counts over a ``streaming_drift_monitor``
+    delta table at ``snapshot_id`` (default: latest): sum the per-batch
+    deltas — equals one groupBy-count over the ingested event history."""
     from w_userflow_featurestore_spark.sources import LogTable
-    return (LogTable(spark, table_path).read()
+    return (LogTable(spark, table_path).read(snapshot_id)
             .groupBy("datetime", "category")
             .agg(F.sum("n").cast("long").alias("n")))
 
@@ -538,7 +542,11 @@ def streaming_novelty_monitor(docs: DataFrame, scores_path: str,
                   txn=f"nov-ledger:{checkpoint}:{batch_id}")
         if compact_every and (batch_id + 1) % compact_every == 0:
             # roll-up: deltas -> their group-sum, one replace commit
-            lt.rewrite(read_streaming_novelty_ledger(spark, ledger_path))
+            # against the snapshot it summed
+            base = lt.latest_snapshot_id()
+            lt.rewrite(read_streaming_novelty_ledger(spark, ledger_path,
+                                                     base),
+                       expected_base=base)
 
     writer = (docs.writeStream
               .foreachBatch(_sink)
@@ -550,12 +558,13 @@ def streaming_novelty_monitor(docs: DataFrame, scores_path: str,
     return writer.start()
 
 
-def read_streaming_novelty_ledger(spark: SparkSession,
-                                  ledger_path: str) -> DataFrame:
-    """Current shingle-df ledger view over a
-    ``streaming_novelty_monitor`` delta table: sum the per-batch
+def read_streaming_novelty_ledger(spark: SparkSession, ledger_path: str,
+                                  snapshot_id: int | None = None
+                                  ) -> DataFrame:
+    """Shingle-df ledger view over a ``streaming_novelty_monitor`` delta
+    table at ``snapshot_id`` (default: latest): sum the per-batch
     deltas — equals ``shingle_ledger`` over everything ingested."""
     from w_userflow_featurestore_spark.sources import LogTable
-    return (LogTable(spark, ledger_path).read()
+    return (LogTable(spark, ledger_path).read(snapshot_id)
             .groupBy("sh")
             .agg(F.sum("n_docs").cast("long").alias("n_docs")))
